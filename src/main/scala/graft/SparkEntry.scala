@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.geo.GeoTables
+import graft.io.ParquetTable
 import graft.ops.OsmOps
 import graft.join.SpatialJoin
 import graft.knn.Knn
@@ -42,8 +43,12 @@ object SparkEntry {
         when(col("quantity") > 30, map(lit("bulk"), lit("y"))).otherwise(map()),
         when(col("quantity") < 5, map(lit("tiny"), lit("y"))).otherwise(map())))
 
+  /** An input table; its schema comes from one footer, not an inference job. */
+  private def table(s: SparkSession, dir: String, name: String): DataFrame =
+    ParquetTable.read(s, s"$dir/$name.parquet")
+
   private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    table(s, dir, "documents")
 
   /** Stopword list for the quality-signal suite (pluggable). */
   val StopWords: Seq[String] = Seq("the", "a", "and", "of", "is")
@@ -266,7 +271,7 @@ object SparkEntry {
       val p = pts(s, dir)
         .select(col("point_id"), col("way_id"), col("quantity"))
         .localCheckpoint(eager = false)
-      val orders = s.read.parquet(s"$dir/orders.parquet")
+      val orders = table(s, dir, "orders")
       val keptWayRefs = p.join(
         orders.filter(col("o_totalprice") > 300000.0)
           .select(col("o_orderkey").as("way_id")), Seq("way_id"), "left_semi")
@@ -308,7 +313,7 @@ object SparkEntry {
 
     // event-time tumbling window aggregation (batch form of the streaming op)
     "q17_event_window" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, dir, "events")
         .groupBy(col("event_type"), window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n"), min(col("value")).as("min_value"),
           max(col("value")).as("max_value"))
@@ -323,7 +328,7 @@ object SparkEntry {
     // emits only order-independent session columns
     "q36_sessionize" -> ((s, dir) => {
       import s.implicits._
-      val ev = s.read.parquet(s"$dir/events.parquet")
+      val ev = table(s, dir, "events")
         .select(col("user_id"), col("event_type"),
           col("ts").cast("timestamp").as("ts"), col("value"))
         .as[graft.streaming.Streams.Event]
@@ -336,7 +341,7 @@ object SparkEntry {
 
     // semi-structured props extraction + aggregation
     "q18_event_props" -> ((s, dir) =>
-      s.read.parquet(s"$dir/events.parquet")
+      table(s, dir, "events")
         .select(col("event_type"),
           regexp_extract(col("props"), "[0-9]+", 0).cast("long").as("k"))
         .groupBy(col("event_type"))
@@ -548,7 +553,7 @@ object SparkEntry {
 
     // similarity search: exact top-k by int-quantized dot product
     "q27_ann_dot_topk" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = table(s, dir, "embeddings")
       val queries = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
       Ann.bruteTopK(queries, "vec_id", "embedding", emb, "vec_id", "embedding", k = 10)
         .orderBy("query_id", "rank")
@@ -558,7 +563,7 @@ object SparkEntry {
     // — full DuckDB oracle (annLshSql unrolls the 12 plane projections and
     // radius-1 probe buckets); recall vs brute force additionally in AnnSpec
     "q28_ann_lsh" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = table(s, dir, "embeddings")
       val queries = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
       Ann.lshTopK(queries, "vec_id", "embedding", emb, "vec_id", "embedding",
         k = 10, bits = 12, dims = 64, probeRadius = 1)
@@ -568,7 +573,7 @@ object SparkEntry {
     // similarity search: IVF coarse-quantizer path — deterministic
     // centroids, inverted-list assignment by integer L2, nprobe probing
     "q34_ann_ivf" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = table(s, dir, "embeddings")
       val queries = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
       Ann.ivfTopK(queries, "vec_id", "embedding", emb, "vec_id", "embedding",
         k = 10, centroidEvery = 25L, nprobe = 4)
@@ -581,7 +586,7 @@ object SparkEntry {
     // keeps the whole path integer-exact and DuckDB-expressible (q34's
     // precedent); Lloyd's-refined codebooks + exact refine in PqSpec
     "q52_ann_pq" -> ((s, dir) => {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      val emb = table(s, dir, "embeddings")
       val queries = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
       Ann.pqTopK(queries, "vec_id", "embedding", emb, "vec_id", "embedding",
         k = 10, dims = 64, m = 8, codeEvery = 10L)
@@ -592,14 +597,14 @@ object SparkEntry {
     // cross-multiplied cosine threshold on quantized vectors
     "q30_embedding_neardup" -> ((s, dir) =>
       Ann.embeddingNearDupPairs(
-        s.read.parquet(s"$dir/embeddings.parquet"), "vec_id", "embedding",
+        table(s, dir, "embeddings"), "vec_id", "embedding",
         tauNum = 2, tauDen = 5)
         .orderBy("id_1", "id_2")),
 
     // embedding-modality dedup DECISION: exact cosine pairs → convergent
     // CC → keep-one-per-cluster (the q39 composition for the vector column)
     "q41_embedding_dedup" -> ((s, dir) =>
-      Dedup.embeddingDedupeDecision(s.read.parquet(s"$dir/embeddings.parquet"),
+      Dedup.embeddingDedupeDecision(table(s, dir, "embeddings"),
         "vec_id", "embedding", tauNum = 2, tauDen = 5)
         .orderBy("id")),
 
@@ -608,7 +613,7 @@ object SparkEntry {
     // (disjoint id space, so the dup check passes)
     "q31_multi_union" -> ((s, dir) => {
       val a = pts(s, dir).select(col("point_id").as("id"), col("lon"), col("lat"))
-      val o = s.read.parquet(s"$dir/orders.parquet")
+      val o = table(s, dir, "orders")
       // side-b ids are NEGATED order keys: structurally disjoint from pts'
       // positive point_ids for ANY input (the old slot-9 encoding collided
       // with a lineitem carrying l_linenumber = 9 — then the dup check
@@ -708,7 +713,7 @@ object SparkEntry {
         .withColumn("tags", map_concat(
           map(lit("status"), when(col("n_refs") > 2, lit("big")).otherwise(lit("small"))),
           when(col("q") > 100, map(lit("bulk"), lit("y"))).otherwise(map())))
-      val rels = s.read.parquet(s"$dir/orders.parquet")
+      val rels = table(s, dir, "orders")
         .withColumn("tags", map_concat(
           map(lit("flag"), col("o_orderstatus")),
           when(col("o_totalprice") < 10000.0, map(lit("tiny"), lit("y"))).otherwise(map())))

@@ -50,13 +50,23 @@ object Dedup {
     * downstream map work (explode + probe) inherits that parallelism; a
     * real 100 TB input arrives as tens of thousands of splits and this is
     * the identity. Guide §2: derive partitioning from the input, never a
-    * constant tuned for one scale. Safe only on scan-shaped frames (no
-    * upstream exchange — `.rdd` on an exchange-bearing adaptive plan would
-    * eagerly materialize its stages).
+    * constant tuned for one scale. Decided from the physical plan, never
+    * by running it: only a scan-shaped plan (no exchange, no cached
+    * relation) has its split count read, which plans the splits without a
+    * job. Anything else already runs at its exchange's width and is
+    * returned as is — `.rdd` on it would materialize the exchange (or the
+    * cache) in a throwaway job.
     */
   private[graft] def spreadToCores(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
     val dp = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < dp) df.repartition(dp) else df
+    val scanShaped = df.queryExecution.executedPlan.find {
+      case _: Exchange | _: AdaptiveSparkPlanExec | _: InMemoryTableScanExec => true
+      case _ => false
+    }.isEmpty
+    if (scanShaped && df.rdd.getNumPartitions < dp) df.repartition(dp) else df
   }
 
   /** The explicit partition count every width-pinned exchange in the

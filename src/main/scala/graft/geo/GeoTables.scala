@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.ParquetTable
+
 /** Deterministic geo views derived from the driver's testdata tables.
   *
   * The geospatial engine needs point and polygon inputs; the driver provides
@@ -47,7 +49,7 @@ object GeoTables {
     // (the bandedPairs/dedupDistinct precedent). Conditional on a few-split
     // scan, so on real many-split inputs this is the identity and the
     // normal partial-agg plan stands.
-    val li0 = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li0 = ParquetTable.read(spark, s"$dir/lineitem.parquet")
     val dp = spark.sparkContext.defaultParallelism
     val nPart = math.max(dp, spark.sessionState.conf.numShufflePartitions)
     val li = if (li0.rdd.getNumPartitions < dp)
@@ -104,7 +106,7 @@ object GeoTables {
   // ---- rectangles (boundary polygons) --------------------------------------
 
   def rects(spark: SparkSession, dir: String): DataFrame = {
-    val pt = spark.read.parquet(s"$dir/part.parquet")
+    val pt = ParquetTable.read(spark, s"$dir/part.parquet")
     val k = pt("p_partkey")
     // mod-before-multiply, like points: overflow-free for any int64 key
     val cLon = pmod(pmod(k, lit(320000L)) * lit(40503L), lit(320000L))   // center milli

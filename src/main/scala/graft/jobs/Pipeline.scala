@@ -337,8 +337,11 @@ object Pipeline {
 
   // ---- shared state after ingest ----------------------------------------------
 
+  /** @param wayCount rows of `ways`: the upper bound on the ways→nodes
+    *                 conversion's rows, counted by ingest's `maxId` action
+    */
   case class Shared(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
-                    users: DataFrame, maxId: Long,
+                    users: DataFrame, maxId: Long, wayCount: Long,
                     bounds: Option[(Double, Double, Double, Double)],
                     inputUris: Seq[String] = Nil) {
     def unpersist(): Unit = {
@@ -370,16 +373,17 @@ object Pipeline {
     val ways = ways0.drop("user").persist(StorageLevel.MEMORY_AND_DISK)
     val rels = rels0.drop("user").persist(StorageLevel.MEMORY_AND_DISK)
 
-    // fresh-id base for ways→nodes: max over every element id (Planet.maxId)
-    val ids = Seq(nodes, ways, rels).map(_.select(col("id"))).reduce(_ union _)
-    val maxId = ids.agg(max(col("id"))).collect()(0) match {
-      case r if r.isNullAt(0) => 0L
-      case r => r.getLong(0)
-    }
+    // fresh-id base for ways→nodes: max over every element id (Planet.maxId);
+    // the same action counts the ways, which bounds the conversion's rows
+    val ids = Seq(nodes -> false, ways -> true, rels -> false)
+      .map { case (d, isWay) => d.select(col("id"), lit(isWay).as("is_way")) }
+      .reduce(_ union _)
+    val stats = ids.agg(max(col("id")), count_if(col("is_way"))).collect()(0)
+    val maxId = if (stats.isNullAt(0)) 0L else stats.getLong(0)
     // reference UnmarshalPlanet.go:69: each parsed file OVERWRITES
     // p.Bounds, so the LAST input that carries bounds wins (a file with
     // no <bounds> element leaves the previous value standing)
-    Shared(nodes, ways, rels, users, maxId,
+    Shared(nodes, ways, rels, users, maxId, stats.getLong(1),
       planets.reverse.flatMap(_.bounds).headOption,
       inputUris = c.inputs.map(_.uri))
   }
@@ -399,7 +403,7 @@ object Pipeline {
       .agg(avg(col("lon")).as("lon"), avg(col("lat")).as("lat"))
     val withIds = OsmOps.sequentialIds(
       cent.join(shared.ways.withColumnRenamed("id", "way_id"), Seq("way_id")),
-      "way_id", shared.maxId, "new_id")
+      "way_id", shared.maxId, "new_id", maxRows = Some(shared.wayCount))
     withIds.select(
       col("new_id").as("id"), col("version"), col("ts"), col("changeset"),
       col("uid"), lit(null).cast("string").as("user"),

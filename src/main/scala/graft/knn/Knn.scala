@@ -898,15 +898,18 @@ object Knn {
     // is tasks × queries × k — at 128 bucket-partitions and 61k warm
     // stragglers that was 78M rows of shuffle+sort for a 610k-row answer.
     // coalesce reads the same cached/bucketed blocks without a shuffle
-    // and pins the partial volume to cores × queries × k.
+    // and pins the partial volume to cores × queries × k. Applied
+    // unconditionally: coalesce never widens a narrower input, and probing
+    // the width first (`.rdd` on an exchange-bearing frame) would
+    // materialize the point side's shuffle in a throwaway job.
     val targetTasks = math.max(1, spark.sparkContext.defaultParallelism)
     // cast coordinates explicitly: the InternalRow fast path below reads
     // them with getDouble, which on a FloatType column reinterprets the
     // 4-byte word as a double (silent garbage), it does not convert
-    val src0 = points
+    val src = points
       .select(col(pointIdCol).cast("long").as("point_id"),
         col(lonCol).cast("double").as("p_lon"), col(latCol).cast("double").as("p_lat"))
-    val src = if (src0.rdd.getNumPartitions > targetTasks) src0.coalesce(targetTasks) else src0
+      .coalesce(targetTasks)
     // InternalRow iteration (queryExecution.toRdd): the Dataset tuple
     // decoder allocates a Tuple3 + two boxed Doubles PER POINT — ~400M
     // allocations on the 100M-point leg, and the resulting GC pressure

@@ -96,13 +96,19 @@ object OsmOps {
     *  - large inputs: range-repartition on the key + sortWithinPartitions +
     *    `zipWithIndex` — no single-partition stage anywhere, scales to
     *    10^12 rows
+    *
+    * The plan is picked by `df`'s row count against `windowThreshold`:
+    * `maxRows`, a known upper bound on that count, stands in for it, and
+    * so do the extreme thresholds; otherwise a count() pass pays for the
+    * choice.
     */
   def sequentialIds(df: DataFrame, orderCol: String, offset: Long,
-                    idName: String, windowThreshold: Long = 10_000_000L): DataFrame = {
-    // extreme thresholds pick a plan without paying a count() pass
-    val n = if (windowThreshold == Long.MaxValue) 0L
-            else if (windowThreshold <= 0L) Long.MaxValue
-            else df.count()
+                    idName: String, windowThreshold: Long = 10_000_000L,
+                    maxRows: Option[Long] = None): DataFrame = {
+    val n = maxRows.getOrElse(
+      if (windowThreshold == Long.MaxValue) 0L
+      else if (windowThreshold <= 0L) Long.MaxValue
+      else df.count())
     if (n <= windowThreshold) {
       df.withColumn(idName,
         lit(offset) + row_number().over(Window.orderBy(col(orderCol))).cast("long"))

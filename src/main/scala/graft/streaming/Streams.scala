@@ -65,7 +65,7 @@ object Streams {
   /** Streaming source over a parquet directory (file-arrival stream). */
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
-      .schema(spark.read.parquet(dir).schema)
+      .schema(graft.io.ParquetTable.schema(spark, dir))
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
 

@@ -313,9 +313,9 @@ object Corpus {
     // scan's single split — the explicit reduce-width repartition below
     // cannot widen the stage that feeds it. The contamination probe gets
     // the RAW docs frame (contaminatedIds spreads its own branch, and
-    // spreadToCores' `.rdd` probe on an exchange-bearing frame would
-    // eagerly materialize a throwaway job); only the flag-join/window
-    // branch reads the spread frame, with the flag join inlined here.
+    // spreadToCores leaves an exchange-bearing frame at its exchange's
+    // width); only the flag-join/window branch reads the spread frame,
+    // with the flag join inlined here.
     val spread = Dedup.spreadToCores(docs)
     val contIds = contaminatedIds(docs, bench, idCol, textCol, shingleN)
       .withColumn("__cont", lit(true))

@@ -276,6 +276,9 @@ class OsmCliSpec extends SparkSpecBase {
             qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
           n.incrementAndGet()
       }
+      // drain first: ingest's own collect() may still be on the bus, and a
+      // listener registered before it is delivered would count it
+      org.apache.spark.grafttest.TestBus.waitUntilEmpty(spark.sparkContext)
       spark.listenerManager.register(listener)
       try {
         val bos = new java.io.ByteArrayOutputStream()

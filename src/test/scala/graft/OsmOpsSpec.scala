@@ -96,7 +96,14 @@ class OsmOpsSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaZip = OsmOps.sequentialIds(df, "k", 100L, "id", windowThreshold = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // a known row bound picks the plan in place of a count(): below the
+    // threshold the window plan, above it the zipWithIndex plan
+    def viaBound(threshold: Long) =
+      OsmOps.sequentialIds(df, "k", 100L, "id", windowThreshold = threshold, maxRows = Some(5000L))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaWindow === viaZip)
+    assert(viaBound(10_000L) === viaWindow)
+    assert(viaBound(1_000L) === viaWindow)
     assert(viaWindow.size === 5000)
     // ids are a dense sequence starting at offset+1
     assert(viaWindow.map(_._2).min === 101L)

@@ -306,20 +306,13 @@ class PipelineSpec extends SparkSpecBase {
     val shared = Pipeline.ingest(spark, c, p)
     try {
       Pipeline.runOutput(shared, c.outputs.head, None) // warm the persisted frames
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
+      val (rep, jobs) = org.apache.spark.grafttest.TestBus.jobsDuring(spark.sparkContext) {
+        Pipeline.runOutput(shared, c.outputs.head.copy(uri = s"$tmp/acct_pq2"), None)
       }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val rep = Pipeline.runOutput(shared, c.outputs.head.copy(uri = s"$tmp/acct_pq2"), None)
-        Thread.sleep(1000) // async listener bus drain
-        assert(rep.nodes === 300L && rep.ways === 60L && rep.relations === 10L)
-        // 3 class writes + up to 3 broadcast-build jobs for the user dim;
-        // the old post-write count() path needed 3 more full re-runs
-        assert(jobs.get() <= 6, s"parquet output ran ${jobs.get()} jobs")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(rep.nodes === 300L && rep.ways === 60L && rep.relations === 10L)
+      // 3 class writes + up to 3 broadcast-build jobs for the user dim;
+      // the old post-write count() path needed 3 more full re-runs
+      assert(jobs <= 6, s"parquet output ran $jobs jobs")
       // counts match what actually landed on disk
       assert(spark.read.parquet(s"$tmp/acct_pq2/nodes").count() === 300L)
       assert(spark.read.parquet(s"$tmp/acct_pq2/ways").count() === 60L)

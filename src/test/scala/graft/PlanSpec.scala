@@ -176,23 +176,16 @@ class PlanSpec extends SparkSpecBase {
     val a = spark.read.parquet(s"$d/a")
     val b = spark.read.parquet(s"$d/b")
     // construction runs NO job (the old implementation collected eagerly)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    val (u, jobs) = org.apache.spark.grafttest.TestBus.jobsDuring(spark.sparkContext) {
+      graft.ops.OsmOps.unionWithDupCheck(Seq(a, b), "id")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val u = graft.ops.OsmOps.unionWithDupCheck(Seq(a, b), "id")
-      org.apache.spark.grafttest.TestBus.waitUntilEmpty(spark.sparkContext)
-      assert(jobs.get() === 0, "construction must be action-free")
-      // one linear plan: each input appears as exactly one scan (AQE wraps
-      // the tree, so count scans in the plan text), under ONE union
-      val planStr = u.queryExecution.executedPlan.toString
-      assert("FileScan parquet".r.findAllIn(planStr).size === 2, planStr.take(2000))
-      assert("Union".r.findAllIn(planStr).size === 1, planStr.take(2000))
-      assert(u.count() === 200L)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs === 0, "construction must be action-free")
+    // one linear plan: each input appears as exactly one scan (AQE wraps
+    // the tree, so count scans in the plan text), under ONE union
+    val planStr = u.queryExecution.executedPlan.toString
+    assert("FileScan parquet".r.findAllIn(planStr).size === 2, planStr.take(2000))
+    assert("Union".r.findAllIn(planStr).size === 1, planStr.take(2000))
+    assert(u.count() === 200L)
   }
 
   test("tag key-existence filter keeps exactly the matching rows and prunes columns") {
