@@ -1,10 +1,12 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.nio.charset.StandardCharsets
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Parquet-backed snapshot/manifest table — the "Iceberg-like" layer
   * (SURVEY.md §7.1.8; no Iceberg runtime jar exists in this environment).
@@ -25,8 +27,27 @@ import java.nio.charset.StandardCharsets
   * leaves data dirs without manifests, which the rerun overwrites via
   * dynamic partition overwrite. Deterministic upstream pipelines therefore
   * produce byte-identical committed tables after any number of crashes.
+  *
+  * Cost: a commit evaluates its input ONCE — one Spark action, the write:
+  *  1. list the committed manifests (driver);
+  *  2. write the rows whose key has no manifest; the incoming key set and
+  *     the null-key count ride that write as observed metrics;
+  *  3. count each written partition's rows from its parquet footers
+  *     (driver, no job);
+  *  4. write the manifests, then the snapshot, then CURRENT.
+  * A skipped (already committed) partition's snapshot row count is its
+  * manifest's, not a count of the incoming rows; for a deterministic
+  * upstream the two are equal. A read ([[read]], [[readPartitions]]) runs
+  * no job: the data schema comes from one footer. (Past
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` partition dirs,
+  * Spark's own file listing runs as a job.)
   */
 object SnapshotTable {
+
+  /** How long a commit waits, after its write, for the write's observed
+    * metrics to reach the driver's listener bus.
+    */
+  private val ObservedWait = 5.minutes
 
   case class CommitReport(snapshotId: String, written: Seq[String],
                           skipped: Seq[String], totalRows: Long)
@@ -109,6 +130,9 @@ object SnapshotTable {
 
   /** Commit `df` into the table, partitioned by `partCol` (string-keyed).
     * Only partitions without a manifest are written. Returns metrics.
+    * A null key is rejected with an `IllegalArgumentException` after the
+    * write; the partitions that write produced are deleted, and no
+    * manifest, snapshot or CURRENT is written.
     *
     * @param operator lineage tag for the producing operator chain
     * @param upstream upstream snapshot ids / source URIs (lineage)
@@ -125,7 +149,8 @@ object SnapshotTable {
     * data is immutable by contract: never delete an ancestor version a
     * descendant references. Inherited refs pass through unchanged, so
     * inheritance chains collapse to the original writer's dir — reads never
-    * walk ancestors.
+    * walk ancestors. An input key that is also inherited is rejected like
+    * a null key: after the write, with no manifest written.
     */
   def commitCow(df: DataFrame, root: String, partCol: String,
                 operator: String, upstream: Seq[String],
@@ -138,42 +163,58 @@ object SnapshotTable {
     val spark = df.sparkSession
     val rootP = new Path(root)
     val f = fs(spark, rootP)
+    val dataP = new Path(rootP, "data")
+    def partDir(k: String) = new Path(dataP, s"$partCol=${escKey(k)}")
 
-    // 1. incoming partition inventory (one agg job; drives resume + metrics)
-    val counts: Map[String, Long] = df
-      .groupBy(col(partCol).cast("string").as("k")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(!counts.contains(null),
-      s"null partition key in '$partCol': ${counts.getOrElse(null, 0L)} rows — " +
-        "null-keyed rows would be invisible to resume; coalesce the key upstream")
-    val overlap = inherited.keySet.intersect(counts.keySet)
-    require(overlap.isEmpty,
-      s"partitions both rewritten and inherited: ${overlap.toSeq.sorted.take(5)}")
-
-    // 2. committed = manifests present (filenames carry the ESCAPED key)
+    // 1. committed = manifests present (filenames carry the ESCAPED key)
     val manDir = new Path(rootP, "manifests")
     val committed: Set[String] =
       if (!f.exists(manDir)) Set.empty
       else f.listStatus(manDir).map(_.getPath.getName).filter(_.endsWith(".json"))
         .map(n => unescKey(n.stripSuffix(".json"))).toSet
 
-    val missing = counts.keySet.diff(committed).toSeq.sorted
-    val skipped = counts.keySet.intersect(committed).toSeq.sorted
+    // 2. one write of the uncommitted partitions; dynamic overwrite cleans
+    //    any half-written dirs from a killed previous run. The incoming key
+    //    set and null count ride it as observed metrics, taken BELOW the
+    //    filter so that skipped keys are seen too; null keys are never
+    //    written (`not isin` drops them as well)
+    val key = col(partCol).cast("string")
+    val obs = new Observation
+    val seen = df.observe(obs, collect_set(key).as("keys"), count_if(col(partCol).isNull).as("nulls"))
+    (if (committed.isEmpty) seen.filter(key.isNotNull) else seen.filter(!key.isin(committed.toSeq: _*)))
+      .write
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .partitionBy(partCol)
+      .parquet(dataP.toString)
+    val metrics = Await.result(obs.future, ObservedWait)
+    val incoming = metrics.getSeq[String](0).toSet
+    val nulls = metrics.getLong(1)
 
-    // 3. write only missing partitions; dynamic overwrite cleans any
-    //    half-written dirs from a killed previous run
-    if (missing.nonEmpty) {
-      df.filter(col(partCol).cast("string").isin(missing: _*))
-        .write
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .partitionBy(partCol)
-        .parquet(new Path(rootP, "data").toString)
-      // 4. per-partition manifests (commit markers with metrics + lineage)
-      missing.foreach { k =>
-        val m = s"""{"key": "${esc(k)}", "rows": ${counts(k)}, "operator": "${esc(operator)}", "upstream": [${upstream.map(u => "\"" + esc(u) + "\"").mkString(", ")}]}"""
-        writeFile(spark, new Path(manDir, s"${escKey(k)}.json"), m)
-      }
+    val missing = incoming.diff(committed).toSeq.sorted
+    val skipped = incoming.intersect(committed).toSeq.sorted
+    val overlap = inherited.keySet.intersect(incoming)
+    if (nulls > 0 || overlap.nonEmpty) {
+      // rejected: this write's partitions never get a manifest, so drop them
+      missing.foreach(k => f.delete(partDir(k), true))
+      require(nulls == 0,
+        s"null partition key in '$partCol': $nulls rows — " +
+          "null-keyed rows would be invisible to resume; coalesce the key upstream")
+      require(overlap.isEmpty,
+        s"partitions both rewritten and inherited: ${overlap.toSeq.sorted.take(5)}")
+    }
+
+    // 3. row counts: a written partition's from its files' footers (only
+    //    committed task attempts leave files, so retries count once), a
+    //    skipped one's from its manifest
+    val rows: Map[String, Long] =
+      missing.map(k => k -> ParquetTable.rowCount(spark, partDir(k).toString)).toMap ++
+        skipped.map(k => k -> parseManifest(spark, new Path(manDir, s"${escKey(k)}.json"))._2)
+
+    // 4. per-partition manifests (commit markers with metrics + lineage)
+    missing.foreach { k =>
+      val m = s"""{"key": "${esc(k)}", "rows": ${rows(k)}, "operator": "${esc(operator)}", "upstream": [${upstream.map(u => "\"" + esc(u) + "\"").mkString(", ")}]}"""
+      writeFile(spark, new Path(manDir, s"${escKey(k)}.json"), m)
     }
     // 4b. inherited partitions: a manifest POINTER per key (no data write);
     //     resume-safe like real partitions — already-present manifests skip
@@ -185,7 +226,7 @@ object SnapshotTable {
     }
 
     // 5. snapshot: parent chain + full partition inventory (real + inherited)
-    val inventory = counts ++ inherited.map { case (k, r) => k -> r.rows }
+    val inventory = rows ++ inherited.map { case (k, r) => k -> r.rows }
     val parent = currentSnapshotId(spark, root)
     val snapId = f"s${parent.map(_.drop(1).toInt + 1).getOrElse(0)}%04d"
     val partsJson = inventory.toSeq.sortBy(_._1)
@@ -213,30 +254,34 @@ object SnapshotTable {
   def readPointer(spark: SparkSession, path: String): Option[String] =
     readFile(spark, new Path(path)).map(_.trim).filter(_.nonEmpty)
 
-  /** The committed partition inventory as physical refs. A partition this
-    * root wrote resolves to its own data dir; one inherited by
-    * [[commitCow]] resolves to the location its manifest records (the
-    * original writer's dir).
+  /** One manifest parsed: (key, rows, explicit location if present). The
+    * ONE reader [[commit]], [[partitionRefs]] and [[manifestRows]] go
+    * through — escape-aware on the JSON values (keys may contain
+    * quotes/backslashes).
     */
-  /** All manifests parsed: (key, rows, explicit location if present). The
-    * ONE reader both [[partitionRefs]] and [[manifestRows]] go through —
-    * escape-aware on the JSON values (keys may contain quotes/backslashes).
-    */
+  private def parseManifest(spark: SparkSession, p: Path): (String, Long, Option[String]) = {
+    val s = readFile(spark, p).get
+    val key = jsonStr("key", s).getOrElse(
+      throw new java.io.IOException(s"manifest missing key: $p"))
+    val rows = """"rows": (\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
+    (key, rows, jsonStr("location", s))
+  }
+
   private def parsedManifests(spark: SparkSession,
                               root: String): Seq[(String, Long, Option[String])] = {
     val rootP = new Path(root)
     val f = fs(spark, rootP)
     val manDir = new Path(rootP, "manifests")
     if (!f.exists(manDir)) Nil
-    else f.listStatus(manDir).map(_.getPath).filter(_.getName.endsWith(".json")).toSeq.map { p =>
-      val s = readFile(spark, p).get
-      val key = jsonStr("key", s).getOrElse(
-        throw new java.io.IOException(s"manifest missing key: $p"))
-      val rows = """"rows": (\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-      (key, rows, jsonStr("location", s))
-    }
+    else f.listStatus(manDir).map(_.getPath).filter(_.getName.endsWith(".json")).toSeq
+      .map(parseManifest(spark, _))
   }
 
+  /** The committed partition inventory as physical refs. A partition this
+    * root wrote resolves to its own data dir; one inherited by
+    * [[commitCow]] resolves to the location its manifest records (the
+    * original writer's dir).
+    */
   def partitionRefs(spark: SparkSession, root: String,
                     partCol: String): Map[String, PartRef] = {
     val rootP = new Path(root)
@@ -267,11 +312,15 @@ object SnapshotTable {
                        root: String): DataFrame = {
     require(refs.nonEmpty, s"no committed partitions under $root")
     // partition-column values come from dir names, so each distinct parent
-    // data dir needs its own basePath scan; union the (few) groups
+    // data dir needs its own basePath scan; union the (few) groups. The
+    // footer's data schema spares the inference job; Spark still infers the
+    // partition column and its type from the dir names
     refs.values.toSeq.map(_.location)
       .groupBy(l => new Path(l).getParent.toString).toSeq.sortBy(_._1)
-      .map { case (base, dirs) =>
-        spark.read.option("basePath", base).parquet(dirs.sorted: _*)
+      .map { case (base, dirs0) =>
+        val dirs = dirs0.sorted
+        spark.read.option("basePath", base).schema(ParquetTable.dataSchema(spark, dirs))
+          .parquet(dirs: _*)
       }.reduce(_.unionByName(_))
   }
 

@@ -284,7 +284,7 @@ object Pipeline {
                   .find(_.contains("=")).map(_.takeWhile(_ != '=')) else None)
                   .getOrElse("part")
               graft.io.SnapshotTable.read(spark, path, partCol).drop(partCol)
-            } else spark.read.parquet(path)
+            } else graft.io.ParquetTable.read(spark, path)
           // prune: id + body + tags + only the attrs some output still needs
           val needed = Seq("id") ++ p.neededAttrCols.filterNot(_ == "uid") ++
             (if (p.dropUserId && p.dropUserName) Nil else Seq("uid")) ++

@@ -11,13 +11,14 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.geo.{GeoTables, OsmFixtures}
-import graft.io.{OsmXml, ParquetTable}
+import graft.io.{OsmXml, ParquetTable, SnapshotTable}
 import graft.jobs.Pipeline
-import graft.jobs.Pipeline.{InputSpec, PipelineConfig}
+import graft.jobs.Pipeline.{InputSpec, OutputSpec, PipelineConfig}
 
 /** Building a query runs no Spark job: no schema-inference job for the
-  * input tables, no `.rdd` width probe on an exchange-bearing frame, no
-  * count() to pick a plan. Each spec pins one such job that used to run.
+  * input tables (plain parquet or snapshot), no `.rdd` width probe on an
+  * exchange-bearing frame, no count() to pick a plan. Each spec pins one
+  * such job that used to run.
   */
 class ConstructionJobsSpec extends SparkSpecBase {
 
@@ -53,6 +54,64 @@ class ConstructionJobsSpec extends SparkSpecBase {
     assert(jobs === 0, "a footer read runs no job")
     assert(df.schema === want)
     assert(df.count() === 1000L)
+  }
+
+  test("SnapshotTable.read and readPartitions launch no job and keep the inferred schema") {
+    import spark.implicits._
+    def root() = Files.createTempDirectory("graft_snapread").toString
+    def table(keys: Seq[String]) =
+      keys.zipWithIndex.flatMap { case (k, i) => (0 to i).map(j => (s"id_${i}_$j", j.toDouble, k)) }
+        .toDF("id", "v", "k")
+    // what `spark.read.parquet` infers for the same partition dirs, one
+    // basePath scan per parent data dir
+    def inferred(root: String, keys: Set[String]) =
+      SnapshotTable.partitionRefs(spark, root, "k").filter(kv => keys(kv._1)).values
+        .map(_.location).toSeq.groupBy(l => new org.apache.hadoop.fs.Path(l).getParent.toString)
+        .toSeq.sortBy(_._1)
+        .map { case (base, dirs) => spark.read.option("basePath", base).parquet(dirs.sorted: _*) }
+        .reduce(_.unionByName(_)).schema
+    def check(label: String, root: String, subset: Seq[String]): Unit = {
+      val all = SnapshotTable.manifestRows(spark, root).keySet
+      val (df, jobs) = TestBus.jobsDuring(sc)(SnapshotTable.read(spark, root, "k"))
+      assert(jobs === 0, s"$label: read")
+      assert(df.schema === inferred(root, all), label)
+      val (part, partJobs) =
+        TestBus.jobsDuring(sc)(SnapshotTable.readPartitions(spark, root, "k", subset))
+      assert(partJobs === 0, s"$label: readPartitions")
+      assert(part.schema === inferred(root, subset.toSet), label)
+    }
+
+    val digits = root()
+    SnapshotTable.commit(table(Seq("3", "17", "250")), digits, "k", "digits")
+    assert(SnapshotTable.read(spark, digits, "k").schema("k").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    check("all-digit keys", digits, Seq("3", "17"))
+
+    val specials = root()
+    val specialKeys = Seq("2024-01-01 00:00:00", "a/b", "pct%20done", "qu\"ote", "plain")
+    SnapshotTable.commit(table(specialKeys), specials, "k", "specials")
+    check("path-special keys", specials, Seq("a/b", "qu\"ote"))
+
+    // copy-on-write: "3" and "17" inherited from `digits`, "9" written here
+    val cow = root()
+    SnapshotTable.commitCow(table(Seq("9")), cow, "k", "cow", Seq(digits),
+      inherited = SnapshotTable.partitionRefs(spark, digits, "k") - "250")
+    assert(SnapshotTable.read(spark, cow, "k").count() === 1L + 1L + 2L)
+    check("copy-on-write", cow, Seq("3", "9"))
+  }
+
+  test("Pipeline.loadInput on a plain parquet planet launches no job") {
+    val tmp = Files.createTempDirectory("graft_pqplanet").toString
+    val planet = OsmFixtures.planet(spark, 300, 60, 10)
+    val dir = s"$tmp/planet"
+    planet.nodes.write.parquet(s"$dir/nodes")
+    planet.ways.write.parquet(s"$dir/ways")
+    planet.relations.write.parquet(s"$dir/relations")
+    val in = InputSpec(uri = dir)
+    val p = Pipeline.plan(PipelineConfig(Seq(in), Seq(OutputSpec(uri = s"$tmp/out", format = Some("parquet")))))
+    val (loaded, jobs) = TestBus.jobsDuring(sc)(Pipeline.loadInput(spark, in, 0, p))
+    assert(jobs === 0)
+    assert((loaded.nodes.count(), loaded.ways.count(), loaded.relations.count()) === ((300L, 60L, 10L)))
   }
 
   test("constructing GeoTables.points and rects launches no job") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.grafttest.TestBus
 import org.apache.spark.sql.functions._
 import graft.io.SnapshotTable
 
@@ -67,10 +68,66 @@ class SnapshotTableSpec extends SparkSpecBase {
   test("null partition keys are rejected loudly, not silently dropped") {
     val df = Seq(("a", Some("k1")), ("b", None), ("c", Some("k2")))
       .toDF("id", "k")
+    val root = freshRoot()
     val e = intercept[IllegalArgumentException] {
-      SnapshotTable.commit(df, freshRoot(), "k", "nulls")
+      SnapshotTable.commit(df, root, "k", "nulls")
     }
     assert(e.getMessage.contains("null partition key"))
+    // the rejected commit leaves nothing committed and no null-key data
+    assert(SnapshotTable.manifestRows(spark, root).isEmpty)
+    assert(!new java.io.File(s"$root/snapshots").exists())
+    assert(SnapshotTable.currentSnapshotId(spark, root).isEmpty)
+    assert(!new java.io.File(s"$root/data/k=__HIVE_DEFAULT_PARTITION__").exists())
+  }
+
+  test("commit evaluates its input once") {
+    val evals = spark.sparkContext.longAccumulator("snapshot-input-evals")
+    // the key itself goes through the counting UDF, so any pass over the
+    // input (an inventory query, the write) evaluates it
+    val bump = udf { (k: String) => evals.add(1); k }.asNondeterministic()
+    val counted = full.withColumn("cell5", bump(col("cell5")))
+    val root = freshRoot()
+    val (rep, commitJobs) = TestBus.jobsDuring(spark.sparkContext)(
+      SnapshotTable.commit(counted, root, "cell5", "fixture-images"))
+    assert(rep.totalRows === 500L)
+    assert(evals.value === 500L, "the input must be evaluated exactly once")
+    val plain = java.nio.file.Files.createTempDirectory("graft_plain").resolve("t").toString
+    val (_, writeJobs) = TestBus.jobsDuring(spark.sparkContext)(
+      full.write.partitionBy("cell5").parquet(plain))
+    assert(commitJobs <= writeJobs, s"commit ran $commitJobs jobs, a plain write $writeJobs")
+  }
+
+  test("empty inputs commit an empty snapshot without hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val inputs = Seq(
+      "empty" -> Seq.empty[(String, String)].toDF("image_id", "cell5"),
+      "limit(0)" -> full.limit(0),
+      // PropagateEmptyRelation folds the whole join to an empty relation
+      "empty join" -> full.join(full.select("image_id").limit(0), "image_id"))
+    inputs.foreach { case (label, df) =>
+      val rep = Await.result(
+        Future(SnapshotTable.commit(df, freshRoot(), "cell5", "empty")), 2.minutes)
+      assert(rep.totalRows === 0L, label)
+      assert(rep.snapshotId === "s0000", label)
+      assert(rep.written.isEmpty && rep.skipped.isEmpty, label)
+    }
+  }
+
+  test("copy-on-write input overlapping an inherited partition is rejected") {
+    val base = freshRoot()
+    SnapshotTable.commit(full, base, "cell5", "fixture-images")
+    val refs = SnapshotTable.partitionRefs(spark, base, "cell5")
+    val key = refs.keys.min
+    val root = freshRoot()
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.commitCow(full.filter(col("cell5") === key), root, "cell5",
+        "cow", Seq(base), inherited = refs)
+    }
+    assert(e.getMessage.contains("both rewritten and inherited"))
+    assert(SnapshotTable.manifestRows(spark, root).isEmpty)
+    assert(SnapshotTable.currentSnapshotId(spark, root).isEmpty)
   }
 
   test("partial run (simulated kill) resumes: only missing partitions written") {
@@ -104,6 +161,14 @@ class SnapshotTableSpec extends SparkSpecBase {
     val expected = full.groupBy("cell5").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(SnapshotTable.manifestRows(spark, root) === expected)
+    // the resumed snapshot's inventory: skipped partitions from their
+    // manifests, written ones from their footers
+    val snap = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/snapshots/s0001.json")))
+    assert(snap.contains(""""total_rows": 500"""))
+    val snapRows = """\{"key": "([^"]*)", "rows": (\d+)\}""".r.findAllMatchIn(snap)
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    assert(snapRows === SnapshotTable.manifestRows(spark, root))
   }
 
   test("re-commit of an unchanged table is a no-op (all partitions skipped)") {
