@@ -190,11 +190,11 @@ object Ann {
       .toDF("id_1", "id_2", "dot")
   }
 
-  /** Factor-100 integer quantization + round-robin spread of the corpus,
-    * shared by [[embeddingNearDupPairs]] and the bench isolation leg.
+  /** Factor-100 integer quantization + round-robin spread of the corpus
+    * for [[embeddingNearDupPairs]].
     */
-  private[graft] def triangleQuantized(df: DataFrame, idCol: String,
-                                       embCol: String): DataFrame =
+  private def triangleQuantized(df: DataFrame, idCol: String,
+                                embCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("vid"),
       quantizeScaled(col(embCol), 100.0).as("qe"))
       .repartition(math.max(2, df.sparkSession.sparkContext.defaultParallelism))
@@ -230,7 +230,7 @@ object Ann {
     * only full pass over vector rows and its parallelism is b (≥ the
     * default's 8×-cores task budget after the square root).
     */
-  private[graft] def triangleTasks(quant: DataFrame, b: Int)
+  private def triangleTasks(quant: DataFrame, b: Int)
       : org.apache.spark.rdd.RDD[(Int, (Int, Array[Byte]))] = {
     val spark = quant.sparkSession
     import spark.implicits._
@@ -619,9 +619,9 @@ object Ann {
         !toCol(graft.expr.ArrayHasNullExpr(toExpr(col("__e")))))
   }
 
-  private[graft] def pqEncodePackedWith(corpus: DataFrame, idCol: String,
-                                        embCol: String, book: PqBook,
-                                        dims: Int, m: Int): Dataset[(Long, Array[Long])] = {
+  private def pqEncodePackedWith(corpus: DataFrame, idCol: String,
+                                 embCol: String, book: PqBook,
+                                 dims: Int, m: Int): Dataset[(Long, Array[Long])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val dsub = book.dsub
@@ -706,10 +706,10 @@ object Ann {
     * or [[pqPack]]); (`qIds`, `table`) from [[pqDriverLut]]; code values
     * resolve to table indices by binary search over the book's sorted
     * cids. */
-  private[graft] def pqAdcCandidates(packed: Dataset[(Long, Array[Long])],
-                                     qIds: Array[Long], book: PqBook,
-                                     table: Array[Long],
-                                     m: Int, topR: Int): DataFrame = {
+  private def pqAdcCandidates(packed: Dataset[(Long, Array[Long])],
+                              qIds: Array[Long], book: PqBook,
+                              table: Array[Long],
+                              m: Int, topR: Int): DataFrame = {
     val spark = packed.sparkSession
     import spark.implicits._
     if (topR <= 0) // k = 0, refine = 0: empty result, not a 0-length heap

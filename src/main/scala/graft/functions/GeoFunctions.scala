@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
 import org.apache.spark.sql.functions._
 import graft.expr._
@@ -20,12 +20,6 @@ object GeoFunctions {
 
   def tile_y(lat: Column, z: Int): Column =
     toCol(TileYExpr(toExpr(lat), toExpr(lit(z))))
-
-  /** struct<z:int, x:long, y:long> — the reference's Node.Tile(z) output
-    * (`/root/reference/osm/Node.go:26-33`).
-    */
-  def tile_xy(lon: Column, lat: Column, z: Int): Column =
-    struct(lit(z).as("z"), tile_x(lon, z).as("x"), tile_y(lat, z).as("y"))
 
   /** Bing-maps quadkey digit string for slippy tile (x, y) at zoom z —
     * digit i (most-significant level first) = x-bit + 2·y-bit at level
@@ -66,39 +60,9 @@ object GeoFunctions {
   def sorted_intersect_count(a: Column, b: Column): Column =
     toCol(SortedIntersectCountExpr(toExpr(a), toExpr(b)))
 
-  /** Ancestor cell id at a lower zoom, composed from builtin bit ops so it
-    * rides whole-stage codegen. `fromZ` must be the cells' actual zoom.
-    * Delegates to [[graft.index.CellIndex.ancestorCol]] — the one encoding
-    * of the packed (morton << ZoomBits | z) layout.
-    */
-  def cell_ancestor(cell: Column, fromZ: Int, toZ: Int): Column =
-    graft.index.CellIndex.ancestorCol(cell, fromZ, toZ)
-
   /** Squared euclidean distance in degree space (kNN metric). */
   def sq_dist_deg(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column =
     (lon1 - lon2) * (lon1 - lon2) + (lat1 - lat2) * (lat1 - lat2)
-
-  /** Great-circle distance in meters (haversine), builtin-composed. */
-  def haversine_m(lon1: Column, lat1: Column, lon2: Column, lat2: Column): Column = {
-    val r = lit(6371000.0)
-    val dLat = radians(lat2 - lat1)
-    val dLon = radians(lon2 - lon1)
-    val a = pow(sin(dLat / 2), 2) +
-      cos(radians(lat1)) * cos(radians(lat2)) * pow(sin(dLon / 2), 2)
-    r * lit(2.0) * asin(sqrt(a))
-  }
-
-  /** bbox containment predicate — the reference's Bounds.ContainsPoint with
-    * the lon/lat-swap bug fixed (`/root/reference/osm/Bounds.go:24-26`:
-    * line 25 tests lon against MinimumLatitude; we implement the intent).
-    */
-  def in_bbox(lon: Column, lat: Column,
-              minLon: Double, minLat: Double, maxLon: Double, maxLat: Double): Column =
-    lon.between(minLon, maxLon) && lat.between(minLat, maxLat)
-
-  /** GeoJSON geometry for a point (reference NodeToFeature.go:8-10). */
-  def geojson_point(lon: Column, lat: Column): Column =
-    to_json(struct(lit("Point").as("type"), array(lon, lat).as("coordinates")))
 
   /** GeoJSON LineString / Polygon geometry from an array<struct<lon,lat>>
     * (reference WayToFeature, /root/reference/osm/Planet.go:59-78 — closed
@@ -122,19 +86,4 @@ object GeoFunctions {
       id.as("id"),
       tags.as("properties"),
       struct(lit("Point").as("type"), array(lon, lat).as("coordinates")).as("geometry")))
-
-  /** Register SQL-callable names (FunctionRegistry, per SURVEY §2.9). */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cell_id",
-      es => CellIdExpr(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("tile_x",
-      es => TileXExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("tile_y",
-      es => TileYExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("point_in_ring",
-      es => PointInRingExpr(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming64",
-      es => Hamming64Expr(es(0), es(1)), "scala_udf")
-  }
 }

@@ -97,35 +97,6 @@ object GeoFixtures {
   private def clampLon(v: Double): Double = math.max(-179.999, math.min(179.999, v))
   private def clampLat(v: Double): Double = math.max(-84.999, math.min(84.999, v))
 
-  case class PointRow(point_id: Long, lon: Double, lat: Double)
-  case class QueryRow(query_id: Long, lon: Double, lat: Double)
-
-  /** Long-id point table with the [[imagesLite]] coordinate distribution
-    * (60% city-clustered, 40% uniform) — the kNN bench corpus.
-    */
-  def points(spark: SparkSession, n: Long, seed: Long = 42L): DataFrame = {
-    import spark.implicits._
-    spark.range(n).map { id0 =>
-      val id = id0 + seed * 1000003L
-      val (lon, lat) =
-        if (uniform(id, 11) < 0.6) {
-          val c = Cities((mix(id + 4) & 0x7fffffffL).toInt % Cities.length)
-          (clampLon(c._1 + gauss(id, 13) * 0.5), clampLat(c._2 + gauss(id, 17) * 0.5))
-        } else
-          (uniform(id, 19) * 360.0 - 180.0, uniform(id, 23) * 170.0 - 85.0)
-      PointRow(id0, lon, lat)
-    }.toDF()
-  }
-
-  /** kNN query set: same spatial mix as [[points]] under a different seed,
-    * so dense-city AND sparse-ocean queries both occur (the straggler tail
-    * the cell-ring operator's adaptive radius exists for).
-    */
-  def knnQueries(spark: SparkSession, n: Long, seed: Long = 97L): DataFrame = {
-    import spark.implicits._
-    points(spark, n, seed).withColumnRenamed("point_id", "query_id")
-  }
-
   case class DocRow(doc_id: Long, text: String)
 
   private val DocVocab: Array[String] = Array.tabulate(4096) { i =>

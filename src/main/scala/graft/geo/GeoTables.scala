@@ -3,6 +3,7 @@ package graft.geo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.dedup.Dedup
 import graft.io.ParquetTable
 
 /** Deterministic geo views derived from the driver's testdata tables.
@@ -50,10 +51,8 @@ object GeoTables {
     // scan, so on real many-split inputs this is the identity and the
     // normal partial-agg plan stands.
     val li0 = ParquetTable.read(spark, s"$dir/lineitem.parquet")
-    val dp = spark.sparkContext.defaultParallelism
-    val nPart = math.max(dp, spark.sessionState.conf.numShufflePartitions)
-    val li = if (li0.rdd.getNumPartitions < dp)
-      li0.repartition(nPart, li0("l_orderkey"), li0("l_linenumber"))
+    val li = if (li0.rdd.getNumPartitions < spark.sparkContext.defaultParallelism)
+      li0.repartition(Dedup.clusterWidth(spark), li0("l_orderkey"), li0("l_linenumber"))
     else li0
     // lineitem has duplicate (orderkey, linenumber) pairs — group to get a
     // unique point key with deterministic (order-insensitive) aggregates

@@ -7,7 +7,7 @@ import graft.geo.GeoFixtures
 import graft.io.SnapshotTable
 import graft.join.SpatialJoin
 import graft.ops.OsmOps
-import graft.plans.CellPrune
+import graft.plans.GraftExtensions
 
 /** spark-submit entry points (SURVEY.md §7.1.9). Every job writes through
   * [[graft.io.SnapshotTable]] — partitioned by a coarse cell key, with
@@ -18,17 +18,23 @@ import graft.plans.CellPrune
   */
 object Jobs {
 
+  /** `spark.sql.extensions` for a job session: the list spark-submit
+    * configured (if any) with [[GraftExtensions]] appended, never replaced.
+    */
+  private[graft] def extensionList(configured: Option[String]): String =
+    (configured.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) :+
+      classOf[GraftExtensions].getName).distinct.mkString(",")
+
   def session(name: String): SparkSession = {
     val b = SparkSession.builder().appName(name)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", extensionList(sys.props.get("spark.sql.extensions")))
     // local fallback for ad-hoc runs outside spark-submit
     if (!sys.props.contains("spark.master") && sys.env.get("MASTER").isEmpty)
       b.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
         .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val s = b.getOrCreate()
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ CellPrune.CellPruneRule
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -865,23 +865,6 @@ object Knn {
         s += 1
       }
     }
-    if (sys.env.contains("GRAFT_KNN_DEBUG")) {
-      val seededN = thr0.count(_ < Double.MaxValue)
-      val radii = thr0.filter(_ < Double.MaxValue).map(math.sqrt).sorted
-      def pct(p: Double) =
-        if (radii.isEmpty) -1.0 else radii(math.min(radii.length - 1, (p * radii.length).toInt))
-      var listEntries = 0L
-      var maxList = 0
-      byPointCell.forEach((_, v) => { listEntries += v.length; if (v.length > maxList) maxList = v.length })
-      val memberMax = grouped.map(_._2.length).foldLeft(0)(math.max)
-      // scalastyle:off println
-      System.err.println(
-        f"[knn-scan-debug] q=${qs.length} seeded=$seededN g=$g cells=${grouped.length} " +
-        f"memberMax=$memberMax always=${always.length} pointCells=${byPointCell.size()} " +
-        f"listEntries=$listEntries maxList=$maxList " +
-        f"boundRadius p50=${pct(0.5)}%.4f p90=${pct(0.9)}%.4f p99=${pct(0.99)}%.4f max=${pct(1.0)}%.4f")
-      // scalastyle:on println
-    }
 
     // queries as FLAT primitive arrays for the broadcast: the Tuple3 array
     // cost two pointer derefs (ref array → tuple object) per member check —
@@ -982,9 +965,6 @@ object Knn {
         // correctness is unaffected.
         val refreshN = math.max(refreshEvery, nQ)
         var sinceRefresh = 0
-        val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
-        var nPts = 0L; var nRefresh = 0L; var nCellChecks = 0L
-        var nGatePass = 0L; var nMemberChecks = 0L; var nAdmits = 0L
         // cell bboxes decoded ONCE (CellIndex.bounds does inverse-Mercator
         // trig — far too hot for the per-point loop)
         val cMinX = new Array[Double](cells.length)
@@ -1014,10 +994,8 @@ object Knn {
             cellMax(c) = m
             c += 1
           }
-          nRefresh += 1
         }
         def checkCell(c: Int, plon: Double, plat: Double, pid: Long): Unit = {
-          nCellChecks += 1
           // squared distance to the cell bbox, inline (0 inside)
           val dx = if (plon < cMinX(c)) cMinX(c) - plon
                    else if (plon > cMaxX(c)) plon - cMaxX(c) else 0.0
@@ -1026,7 +1004,6 @@ object Knn {
           // a stale-high cellMax only wastes work; never skips wrongly.
           // <=: an equal-distance smaller-id point can still enter.
           if (dx * dx + dy * dy <= cellMax(c)) {
-            nGatePass += 1
             val idx = cells(c)._2
             val lons = cLon(c)
             // members are lon-sorted: any member with |q_lon − p_lon| >
@@ -1047,12 +1024,10 @@ object Knn {
             }
             var j = lo
             while (j < idx.length && lons(j) <= hiB) {
-              nMemberChecks += 1
               val i = idx(j)
               val qdx = plon - qLons(i); val qdy = plat - qLats(i)
               val d = qdx * qdx + qdy * qdy
               if (d <= thr(i)) {
-                nAdmits += 1
                 val base = i * k
                 val n = hN(i)
                 if (n < k) {
@@ -1077,7 +1052,6 @@ object Knn {
         // identical op counts ran ~50× slower. Small named methods JIT
         // individually.
         def processPoint(pid: Long, plon: Double, plat: Double): Unit = {
-          nPts += 1
           sinceRefresh += 1
           if (sinceRefresh >= refreshN) { refreshBounds(); sinceRefresh = 0 }
           // only the query cells this point can possibly matter to: its
@@ -1151,9 +1125,6 @@ object Knn {
             s += 1
           }
         }
-        if (dbg) System.err.println(
-          s"[knn-task-debug] pts=$nPts refresh=$nRefresh cellChecks=$nCellChecks " +
-          s"gatePass=$nGatePass memberChecks=$nMemberChecks admits=$nAdmits")
         (0 until nQ).iterator.flatMap { i =>
           val qid = qIds(i)
           val base = i * k

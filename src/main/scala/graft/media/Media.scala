@@ -433,43 +433,6 @@ object Media {
     }
   }
 
-  /** Box-filter downsample to (tw, th) — the `resize` step of the
-    * multimodal pipeline, pure integer averaging (deterministic).
-    */
-  def resize(px: Array[Byte], w: Int, h: Int, tw: Int, th: Int): Array[Byte] = {
-    val out = new Array[Byte](tw * th)
-    var ty = 0
-    while (ty < th) {
-      var tx = 0
-      while (tx < tw) {
-        val x0 = tx * w / tw; val x1 = math.max(x0 + 1, (tx + 1) * w / tw)
-        val y0 = ty * h / th; val y1 = math.max(y0 + 1, (ty + 1) * h / th)
-        var s = 0L; var n = 0
-        var y = y0
-        while (y < y1) {
-          var x = x0
-          while (x < x1) { s += (px(y * w + x) & 0xff); n += 1; x += 1 }
-          y += 1
-        }
-        out(ty * tw + tx) = (s / n).toByte
-        tx += 1
-      }
-      ty += 1
-    }
-    out
-  }
-
-  /** Video frame sampling STUB (no video codecs exist in this environment;
-    * SURVEY/prompt direct a deterministic fake): a "video" payload is a
-    * concatenation of `nFrames` PNG images; every k-th frame is decoded.
-    * The Spark-side plumbing (schema, batching, one fused pass) is real.
-    */
-  def frameSample(frames: Seq[Array[Byte]], everyK: Int): Seq[(Int, Array[Byte], Int, Int)] =
-    frames.zipWithIndex.collect { case (f, i) if i % everyK == 0 =>
-      val (px, w, h) = decodePng(f)
-      (i, px, w, h)
-    }
-
   /** Frame sampling as a DataFrame operator over the video model
     * (videoId, frames: array<binary>): posexplode indexes the frames,
     * every k-th survives (the filter lands before any byte is decoded),
@@ -486,26 +449,6 @@ object Media {
         posexplode(col(framesCol)).as(Seq("frame_idx", "bytes")))
       .filter(pmod(col("frame_idx"), lit(everyK)) === 0)
     decodeFeatures(exploded) // video_id/frame_idx ride as typed passthrough
-  }
-
-  /** Batched resize over a DataFrame of payloads — one fused decode+resize
-    * pass per partition (the mapInPandas analogue in Scala; Python/pandas
-    * is not available to engine code in this environment).
-    */
-  def resizeBatch(df: DataFrame, tw: Int, th: Int): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(Seq(
-      StructField("image_id", StringType, nullable = false),
-      StructField("pixels", BinaryType, nullable = false),
-      StructField("w", IntegerType, nullable = false),
-      StructField("h", IntegerType, nullable = false)))
-    val rdd = df.select(col("image_id"), col("bytes")).rdd.mapPartitions { it =>
-      it.map { r =>
-        val (px, w, h) = decodePng(r.getAs[Array[Byte]](1))
-        Row(r.getString(0), resize(px, w, h, tw, th), tw, th)
-      }
-    }
-    spark.createDataFrame(rdd, schema)
   }
 
   /** Image near-duplicate pairs: fused decode → 64-bit aHash

@@ -20,8 +20,7 @@ import graft.index.CellIndex
   * touch — the spatial analogue of partition pruning, derived
   * automatically instead of hand-written per query.
   *
-  * Register per session via `GraftExtensions` (spark.sql.extensions) or at
-  * runtime with `spark.experimental.extraOptimizations :+= CellPruneRule`.
+  * Register per session via `GraftExtensions` (spark.sql.extensions).
   */
 object CellPrune {
 

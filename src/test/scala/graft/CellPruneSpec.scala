@@ -30,8 +30,8 @@ class CellPruneSpec extends SparkSpecBase {
 
   // CellPruneRule is installed by GraftExtensions on the shared test
   // session (SparkSpecBase) — the same way the Verify/Bench gate sessions
-  // get it. No per-suite experimental.extraOptimizations mutation: that
-  // leaked the rule into whichever suites happened to run after this one.
+  // and the job mains get it. Suites never add the rule to a live session:
+  // that leaked it into whichever suites happened to run after this one.
 
   test("rule injects an IN(cell, covering...) conjunct for bbox filters") {
     val q = tagged.filter(col("lon").between(-80.0, -75.0) && col("lat").between(37.0, 40.0))
@@ -117,5 +117,12 @@ class CellPruneSpec extends SparkSpecBase {
       s"SELECT point_in_ring(0.5D, 0.5D, $ringSql) AS a," +
       s" point_in_ring(1.5D, 0.5D, $ringSql) AS b").head()
     assert(pir.getBoolean(0) && !pir.getBoolean(1))
+  }
+
+  test("job sessions append GraftExtensions to a spark-submit extension list, never replace it") {
+    val ext = classOf[graft.plans.GraftExtensions].getName
+    assert(graft.jobs.Jobs.extensionList(None) === ext)
+    assert(graft.jobs.Jobs.extensionList(Some("a.B, c.D")) === s"a.B,c.D,$ext")
+    assert(graft.jobs.Jobs.extensionList(Some(s"$ext,a.B")) === s"$ext,a.B")
   }
 }

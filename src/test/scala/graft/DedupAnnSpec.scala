@@ -532,12 +532,11 @@ class DedupAnnSpec extends SparkSpecBase {
     assert(gotEmb === plantedEmb,
       s"exact cosine pairs must equal the planted groups (got ${gotEmb.size}, planted ${plantedEmb.size})")
 
-    // documents — the EXACT parameter set the scaling leg runs
-    // (BenchScaling.dedupeDecisionJob): 8-char shingles keep unrelated-doc
-    // Jaccard near zero (4-char shingles over a shared vocabulary collide
-    // so heavily that the candidate set goes quadratic at corpus scale),
-    // threshold 0.5 keeps the planted 2-of-25-word perturbations
-    // (char-8-gram J ≈ 0.55-0.8). Every emitted cluster must stay within
+    // documents — 8-char shingles keep unrelated-doc Jaccard near zero
+    // (4-char shingles over a shared vocabulary collide so heavily that the
+    // candidate set goes quadratic at corpus scale), and threshold 0.5
+    // keeps the planted 2-of-25-word perturbations (char-8-gram
+    // J ≈ 0.55-0.8). Every emitted cluster must stay within
     // one planted group, and LSH recall over planted dups is high.
     val docs = GeoFixtures.documents(spark, n)
     val dec = Dedup.dedupeDecision(docs, "doc_id", "text",
